@@ -9,7 +9,9 @@ import graft.sources.JaegerJsonSource
 /** Public facade mirroring the reference's API surface
   * (`/root/reference/traceframe/__init__.py:4-15`) in Spark-native form:
   * every function returns a lazy `DataFrame`/`Dataset` plan instead of a
-  * materialized pandas frame.
+  * materialized pandas frame — except [[traceWithSpans]], an eager point
+  * lookup like the reference's (which returns one dict): it runs its one
+  * Spark job when called and returns a local frame.
   *
   * Reference → graft mapping:
   *   - `traces_from_jaeger_file`  → [[tracesFromJaegerFile]]
@@ -38,8 +40,9 @@ object TraceFrame {
   def spansFromJaegerFileWide(spark: SparkSession, path: String): DataFrame =
     SpanOps.pivotTags(spansFromJaegerFile(spark, path))
 
-  /** Single nested trace: summary row + deduplicated spans array; raises
-    * on an unknown traceID like the reference (`strict = false` opts out). */
+  /** Single nested trace, looked up eagerly: summary row + deduplicated
+    * spans array; raises on an unknown traceID like the reference
+    * (`strict = false` opts out). */
   def traceWithSpans(traces: DataFrame, flatSpans: DataFrame,
       traceID: String, strict: Boolean = true): DataFrame =
     SpanOps.traceWithSpans(traces, flatSpans, traceID, strict)

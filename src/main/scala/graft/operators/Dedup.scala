@@ -1707,10 +1707,12 @@ object Dedup {
     // explicit partition count (r19): repartition(col) without a count
     // lets AQE coalesce the tiny write shuffle to ONE task that writes
     // all touched bucket files serially (~0.5 s per write at bench
-    // scale) — the explicit NdlDocBuckets count pins the designed
-    // one-task-per-bucket parallel write at every scale (a db value
-    // lands in exactly one partition either way, so file layout and
-    // contents are unchanged)
+    // scale) — the explicit NdlDocBuckets count keeps the write spread
+    // over NdlDocBuckets tasks at every scale. The partitioner hashes
+    // the db value, so some tasks receive two buckets and some none;
+    // what holds is that each bucket lands in exactly one task, so each
+    // write leaves one file per touched bucket (file layout and
+    // contents are the same either way)
     rows.withColumn("db", ledgerDb(col("text_md5")))
       .repartition(NdlDocBuckets, col("db"))
       .sortWithinPartitions(col("text_md5"))
@@ -2276,8 +2278,10 @@ object Dedup {
     * one file per write. */
   private def ndlWritePrimary(rows: DataFrame, mode: String,
       dest: String): Unit =
-    // explicit count: see ledgerWriteDigests — pins the parallel
-    // one-task-per-bucket write AQE's coalescing otherwise serializes
+    // explicit count: see ledgerWriteDigests — keeps the write spread
+    // over NdlDocBuckets tasks (AQE's coalescing otherwise serializes
+    // it); each bucket lands in exactly one task, so one file per
+    // touched bucket per write
     rows.withColumn("db", ndlDb(col("doc")))
       .repartition(NdlDocBuckets, col("db"))
       .write.mode(mode).partitionBy("db").parquet(dest)
@@ -2422,8 +2426,10 @@ object Dedup {
     * pruning. */
   private def ndlWriteBands(keys: DataFrame, mode: String,
       dest: String): Unit =
-    // explicit count: see ledgerWriteDigests — pins the parallel
-    // one-task-per-bucket write AQE's coalescing otherwise serializes
+    // explicit count: see ledgerWriteDigests — keeps the write spread
+    // over NdlKeyBuckets tasks (AQE's coalescing otherwise serializes
+    // it); each bucket lands in exactly one task, so one file per
+    // touched bucket per write
     ndlWithKb(keys)
       .select(col("kb"), col("band"), col("kh"), col("doc"))
       .repartition(NdlKeyBuckets, col("kb"))

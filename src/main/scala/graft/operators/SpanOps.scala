@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** Span-shaping operators: raw traces → flat spans frame
   * (reference `spans_from_jaeger_file` / `append_spans`,
@@ -173,32 +175,67 @@ object SpanOps {
       .withColumn("warnings", lit(null).cast("array<string>"))
   }
 
-  /** T13 `traceWithSpans` (`traceframe.py:620-632`): point-lookup join of the
-    * traces frame with its (deduplicated) spans, as a single nested row.
-    * Dedup keeps the first span per spanID **deterministically** (window rank
-    * by startTime, spanID-hash) — pandas' `drop_duplicates` keep-first is
-    * row-order-dependent, which has no stable distributed analog.
-    * Reference parity: raises when the traceID is absent
-    * (`traceframe.py:625` — the reference is eager, so `strict` costs one
-    * point-lookup job; pass `strict = false` for a lazy empty result). */
+  /** Span fields [[traceWithSpans]] keeps, in the result's struct order. */
+  private val lookupSpanFields = Seq("spanID", "operationName", "startTime",
+    "duration", "processID", "parent", "service")
+
+  /** Ascending field-by-field comparison with nulls first (Spark's default
+    * ascending order); every compared field is a scalar, so `Comparable`. */
+  private def byFields(names: Seq[String]): Ordering[Row] = (x, y) =>
+    names.iterator.map { n =>
+      (x.getAs[Any](n), y.getAs[Any](n)) match {
+        case (null, null) => 0
+        case (null, _) => -1
+        case (_, null) => 1
+        case (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+      }
+    }.find(_ != 0).getOrElse(0)
+
+  /** Which copy of a duplicated spanID survives: the smallest
+    * (startTime, duration), remaining ties broken on the other fields,
+    * so the pick does not depend on input order. */
+  private val spanPick = byFields(Seq("startTime", "duration",
+    "operationName", "processID", "parent", "service"))
+  private val spanOrder = byFields(Seq("startTime", "spanID"))
+
+  /** T13 `traceWithSpans` (`traceframe.py:620-632`): one trace's summary
+    * row with its deduplicated spans nested as an array of
+    * (spanID, operationName, startTime, duration, processID, parent,
+    * service) structs, sorted by (startTime, spanID).
+    *
+    * Eager, like the reference, which returns a dict: one Spark job scans
+    * the trace rows and the span rows of `traceID` (both keep the pushed
+    * filter) as a union, and the driver assembles the answer, returned as
+    * a local frame. The collect is bounded by `spark.driver.maxResultSize`.
+    * Dedup keeps one span per spanID, the smallest (startTime, duration)
+    * with nulls first, remaining ties broken on the other fields, so the
+    * pick is deterministic — pandas' `drop_duplicates` keep-first depends
+    * on row order, which has no stable distributed analog.
+    *
+    * One row per matching trace row when the trace has at least one span,
+    * none otherwise (inner-join semantics). Reference parity: raises
+    * `NoSuchElementException` when no trace row matches
+    * (`traceframe.py:625`); `strict = false` returns the empty frame. */
   def traceWithSpans(traces: DataFrame, flatSpans: DataFrame,
       traceID: String, strict: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    if (strict && traces.filter(col("traceID") === traceID).isEmpty)
+    val traceRows = traces.filter(col("traceID") === traceID)
+      .select(struct(col("*")).as("t"))
+    val spanRows = flatSpans.filter(col("traceID") === traceID)
+      .select(struct(lookupSpanFields.map(col): _*).as("s"))
+    val (ts, ss) = traceRows.unionByName(spanRows, allowMissingColumns = true)
+      .collect().toSeq.partition(r => !r.isNullAt(r.fieldIndex("t")))
+    if (strict && ts.isEmpty)
       throw new NoSuchElementException(
         s"No trace with traceID=$traceID") // traceframe.py:625 raises
-    val w = Window.partitionBy(col("spanID"))
-      .orderBy(col("startTime"), col("duration"))
-    val spansAgg = flatSpans
-      .filter(col("traceID") === traceID)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-      .groupBy(col("traceID"))
-      .agg(collect_list(struct(
-        col("spanID"), col("operationName"), col("startTime"),
-        col("duration"), col("processID"), col("parent"), col("service")))
-        .as("spans"))
-    traces.filter(col("traceID") === traceID).join(spansAgg, Seq("traceID"))
+    val spans = ss.map(_.getAs[Row]("s"))
+      .groupBy(_.getAs[Any]("spanID")).values.map(_.min(spanPick))
+      .toSeq.sorted(spanOrder)
+    val spanType = spanRows.schema("s").dataType
+    val schema = StructType(traces.schema.fields :+
+      StructField("spans", ArrayType(spanType, containsNull = false),
+        nullable = false))
+    val rows = if (spans.isEmpty) Nil
+      else ts.map(r => Row.fromSeq(r.getAs[Row]("t").toSeq :+ spans))
+    traces.sparkSession.createDataFrame(rows.asJava, schema)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * The bench's per-entry task metrics say HOW MUCH executor time an
   * entry burns but not WHERE its wall goes: a ledger-lifecycle entry is
   * 30-80 sequential Spark jobs (checkpoints, counts, commits), and the
-  * sum of per-job walls vs the entry wall exposes the driver-side gaps
+  * union of the job intervals vs the entry wall exposes the driver time
   * (file commits, listings, planning) that no task metric sees.
   *
   * Usage: runMain graft.tools.QueryProbe q136_neardup_audit[,more]
@@ -107,17 +107,27 @@ object QueryProbe {
       val js = minJobs
       println(s"\n=== $name  wall ${f"$wall%.2f"} s  jobs ${js.size} ===")
       var prevEnd = 0L
-      var sumJob = 0.0; var sumGap = 0.0
       for ((id, j) <- js) {
         val w = (j.t1 - j.t0) / 1e3
         val gap = if (prevEnd == 0) 0.0 else (j.t0 - prevEnd) / 1e3
         prevEnd = j.t1
-        sumJob += w; sumGap += math.max(gap, 0)
         println(f"job $id%3d  wall $w%6.3f  gap $gap%6.3f  tasks ${j.tasks}%4d  run ${j.runMs / 1e3}%7.2f  ${j.desc.take(110)}")
       }
-      println(f"[$name] entry wall $wall%.2f = jobs $sumJob%.2f + inter-job gaps $sumGap%.2f + tail")
+      // jobs overlap, so their walls do not add up: the job share is
+      // the union of their intervals and the driver has the rest
+      val inJobs = unionSeconds(js.map { case (_, j) => (j.t0, j.t1) })
+      println(f"[$name] entry wall $wall%.2f = union of job intervals $inJobs%.2f + driver time ${wall - inJobs}%.2f")
       }
     }
     spark.stop()
+  }
+
+  /** Length in seconds of the union of (start, end) intervals in ms. */
+  private def unionSeconds(intervals: Seq[(Long, Long)]): Double = {
+    var total = 0L; var end = Long.MinValue
+    for ((s, e) <- intervals.sortBy(_._1)) if (e > end) {
+      total += e - math.max(s, end); end = e
+    }
+    total / 1e3
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.operators.{SpanOps, TraceOps}
 import graft.sources.JaegerJsonSource
@@ -77,18 +78,110 @@ class TraceShapingSpec extends SparkTestBase {
   }
 
   test("traceWithSpans: nested single-trace row with deduped spans") {
+    import org.apache.spark.sql.types._
     val nested = SpanOps.traceWithSpans(traces, flat.union(flat), "073a675ee5118cde")
     val row = nested.head()
     assert(nested.count() === 1)
     assert(row.getAs[Seq[Any]]("spans").size === 1) // dupes removed
+    // the schema of the inner join it replaces: trace columns, then a
+    // non-null spans array of non-null structs
+    val str = StringType
+    val tag = StructType(Seq(StructField("key", str), StructField("type", str),
+      StructField("value", str)))
+    assert(nested.schema === StructType(Seq(
+      StructField("traceID", str), StructField("traceName", str),
+      StructField("nspans", IntegerType, nullable = false),
+      StructField("errspans", IntegerType, nullable = false),
+      StructField("duration", LongType, nullable = false),
+      StructField("startTime", TimestampType, nullable = false),
+      StructField("processes", MapType(str, StructType(Seq(
+        StructField("serviceName", str),
+        StructField("tags", ArrayType(tag)))))),
+      StructField("iserror", BooleanType, nullable = false),
+      StructField("spans", ArrayType(StructType(Seq(
+        StructField("spanID", str), StructField("operationName", str),
+        StructField("startTime", LongType), StructField("duration", LongType),
+        StructField("processID", str), StructField("parent", str, nullable = false),
+        StructField("service", str))), containsNull = false),
+        nullable = false))))
+    // spans come back sorted by (startTime, spanID); this trace's input
+    // order is not sorted
+    val id = "3f70456c238d4753"
+    val spans = SpanOps.traceWithSpans(traces, flat, id).head()
+      .getAs[collection.Seq[Row]]("spans").map(s => (s.getAs[Long]("startTime"),
+        s.getAs[String]("spanID")))
+    assert(spans.size === 16)
+    assert(spans === spans.sorted)
+    // a duplicated trace row gives one output row each
+    assert(SpanOps.traceWithSpans(traces.union(traces), flat, id).count() === 2)
+  }
+
+  test("traceWithSpans: a duplicate spanID keeps the earliest copy; " +
+      "ties pick the same copy whatever the input order") {
+    import SparkTestBase.session.implicits._
+    val id = "3f70456c238d4753"
+    val mine = flat.where(col("traceID") === id)
+    val target = mine.orderBy("spanID").limit(1)
+    val (sid, t0) = target.select("spanID", "startTime").as[(String, Long)]
+      .head()
+    def copy(dt: Long, op: String) = target
+      .withColumn("startTime", lit(t0 + dt))
+      .withColumn("operationName", lit(op))
+    def kept(spans: org.apache.spark.sql.DataFrame) =
+      SpanOps.traceWithSpans(traces, spans, id).head()
+        .getAs[collection.Seq[Row]]("spans")
+    def pick(spans: org.apache.spark.sql.DataFrame): String =
+      kept(spans).filter(_.getAs[String]("spanID") == sid)
+        .map(_.getAs[String]("operationName")).mkString(",")
+    // the earliest of three copies survives, and only one copy does
+    val three = copy(5, "late").union(mine).union(copy(-1, "early"))
+    assert(kept(three).size === 16)
+    assert(pick(three) === "early")
+    // equal (startTime, duration): the other fields break the tie
+    val (a, b) = (copy(-1, "tie-b"), copy(-1, "tie-a"))
+    assert(pick(a.union(b).union(mine)) === "tie-a")
+    assert(pick(b.union(a).union(mine)) === "tie-a")
   }
 
   test("traceWithSpans: unknown traceID raises (reference parity)") {
     intercept[NoSuchElementException](
       SpanOps.traceWithSpans(traces, flat, "nope"))
-    // non-strict opt-out yields a lazy empty frame
+    // non-strict opt-out yields an empty frame
     assert(SpanOps.traceWithSpans(traces, flat, "nope", strict = false)
       .count() === 0)
+    // a trace row without spans is found (no raise) but gives no row,
+    // as the inner join did
+    assert(SpanOps.traceWithSpans(traces, flat, "cc2883e37242fbb8")
+      .count() === 0)
+  }
+
+  test("traceWithSpans: one Spark job and no shuffle per lookup, " +
+      "found or not, strict or not") {
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler._
+    import org.apache.spark.GraftSparkBridge.drainListenerBus
+    val jobs = new AtomicLong
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    // fill both caches first, so their building is not counted
+    traces.count(); flat.count()
+    drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (id <- Seq("3f70456c238d4753", "nope"); strict <- Seq(true, false)) {
+        jobs.set(0); shuffled.set(0)
+        try SpanOps.traceWithSpans(traces, flat, id, strict).collect()
+        catch { case _: NoSuchElementException => assert(strict && id == "nope") }
+        drainListenerBus(spark.sparkContext)
+        assert((jobs.get, shuffled.get) === (1L, 0L), s"$id strict=$strict")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("pivotTags: columns are typed by the tag discriminator") {
